@@ -184,7 +184,6 @@ def tokenize_docs_arrow(
     id_col: str = "pid",
     text_col: str = "text",
     maxlen: int | None = None,
-    impl: str = "pyarrow",
 ) -> DataFrame:
     """Shuffle-free (id, term, tf, doclen) via Arrow mapInPandas.
 
@@ -200,16 +199,14 @@ def tokenize_docs_arrow(
     """
     from collections.abc import Iterator as _It
 
-    batch_fn = (_tokenize_batch_pyarrow if impl == "pyarrow"
-                else _tokenize_batch_re)
-
     def run(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
         import numpy as np
         import pyarrow as pa
 
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            doclens, doc_idx, flat = batch_fn(list(pdf[text_col]), maxlen)
+            doclens, doc_idx, flat = _tokenize_batch_pyarrow(
+                list(pdf[text_col]), maxlen)
             if flat.size == 0:
                 continue
             # (doc, term) counting: dictionary-encode terms C-side, then

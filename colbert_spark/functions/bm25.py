@@ -14,8 +14,7 @@ total order (reference tiebreak: server.py:34).
 
 from __future__ import annotations
 
-import math
-
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -44,17 +43,12 @@ def term_score(tf_col: Column, doclen_col: Column, avgdl: Column | float,
     return idf_col * tf * F.lit(K1 + 1.0) / denom
 
 
-def py_idf(df: int, num_docs: int) -> float:
-    """Python mirror (test oracle / numpy kernels)."""
-    return math.log((num_docs - df + 0.5) / (df + 0.5) + 1.0)
-
-
-def py_term_score(tf: float, doclen: float, avgdl: float, idf_val: float) -> float:
-    return idf_val * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * doclen / avgdl))
-
-
-def py_max_term_score(idf_val: float, tf: float, doclen: float, avgdl: float) -> float:
-    """Upper bound of a term's score over a set of (tf, doclen) pairs is NOT
-    monotone in tf alone; callers pass the max of py_term_score over the
-    block instead. Kept for documentation symmetry."""
-    return py_term_score(tf, doclen, avgdl, idf_val)
+def np_term_score(tfs: np.ndarray, dls: np.ndarray,
+                  idf: "float | np.ndarray", avgdl: float) -> np.ndarray:
+    """Numpy mirror of term_score for the block kernels (build, purge,
+    MaxScore, scatter). One float64 operation order everywhere, so
+    max_block_score and query-time scores are bit-identical; idf may be
+    per-posting (region builder) or 1.0 (scatter's idf-free core)."""
+    tf = tfs.astype(np.float64)
+    dl = dls.astype(np.float64)
+    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))

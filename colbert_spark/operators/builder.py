@@ -81,13 +81,7 @@ def term_dict_from_agg(agg: DataFrame, num_docs: int) -> DataFrame:
     )
 
 
-def build_term_dict(token_df: DataFrame, num_docs: int) -> DataFrame:
-    """(term, term_id, df, cf, idf). idf is frozen into the dictionary so
-    query time never recomputes corpus math."""
-    return term_dict_from_agg(term_agg(token_df), num_docs)
-
-
-def _make_block_builder(block_size: int, avgdl: float, k1: float, b: float):
+def _make_block_builder(block_size: int, avgdl: float):
     """applyInPandas kernel: one (term_id, salt) group → block rows.
 
     Receives (term_id, pid, tf, doclen, idf); emits POSTINGS_SCHEMA rows.
@@ -112,9 +106,7 @@ def _make_block_builder(block_size: int, avgdl: float, k1: float, b: float):
             )
 
         # exact per-posting BM25 term scores (float64) → block max
-        tff = tfs.astype(np.float64)
-        dlf = dls.astype(np.float64)
-        scores = idf * tff * (k1 + 1.0) / (tff + k1 * (1.0 - b + b * dlf / avgdl))
+        scores = bm25.np_term_score(tfs, dls, idf, avgdl)
 
         rows = []
         n = pids.size
@@ -188,8 +180,7 @@ def build_postings(
                             idf_table=term_dict.select("term_id", "idf"))
 
 
-def _make_region_builder(block_size: int, avgdl: float, k1: float,
-                         b: float):
+def _make_region_builder(block_size: int, avgdl: float):
     """Shared vectorized block-build core of the partition kernels
     (_make_partition_block_kernel and the hybrid payload-feed kernel)."""
     from colbert_spark.functions.codec import (
@@ -214,9 +205,7 @@ def _make_region_builder(block_size: int, avgdl: float, k1: float,
             bad = int(np.flatnonzero(dup)[0]) + 1
             raise ValueError(
                 f"term {int(tid[bad])}: duplicate pids in segments")
-        tff = t.astype(np.float64)
-        dlf = d.astype(np.float64)
-        scores = idf * tff * (k1 + 1.0) / (tff + k1 * (1.0 - b + b * dlf / avgdl))
+        scores = bm25.np_term_score(t, d, idf, avgdl)
         group_counts = np.diff(np.append(group_starts, n))
         idx_in_group = np.arange(n) - np.repeat(group_starts, group_counts)
         b_starts = np.flatnonzero(idx_in_group % block_size == 0)
@@ -246,8 +235,7 @@ def _make_region_builder(block_size: int, avgdl: float, k1: float,
     return build_region
 
 
-def _make_partition_block_kernel(block_size: int, avgdl: float, k1: float,
-                                 b: float):
+def _make_partition_block_kernel(block_size: int, avgdl: float):
     """mapInPandas kernel over partitions pre-shuffled on (term_id, salt)
     and sorted within each partition by (term_id, salt, pid): walks group
     boundaries with numpy and emits POSTINGS_SCHEMA rows.
@@ -261,7 +249,7 @@ def _make_partition_block_kernel(block_size: int, avgdl: float, k1: float,
     Memory bound is unchanged: the carry is one group, and group size is
     bounded by config.max_group_postings via the df-proportional salts.
     """
-    build_region = _make_region_builder(block_size, avgdl, k1, b)
+    build_region = _make_region_builder(block_size, avgdl)
 
     def run(batches):
         carry: list[tuple] = []     # (pids, tfs, dls) slices of one group
@@ -346,8 +334,7 @@ def _salted_blockify(enriched: DataFrame, avgdl: float,
     exchange's partitioning — no second exchange) and the corpus-sized
     shuffle never moves the per-term double.
     """
-    kernel = _make_partition_block_kernel(config.block_size, avgdl,
-                                          config.k1, config.b)
+    kernel = _make_partition_block_kernel(config.block_size, avgdl)
     # narrow the exchanged row (guide: shuffle fewer bytes): tf/doclen are
     # bounded by doc_maxlen and salt by the epoch space — int32 cuts the
     # corpus-sized shuffle from 40 to 28 bytes/row raw (ANSI mode makes
@@ -452,11 +439,12 @@ def live_flat_postings(catalog, spark) -> DataFrame:
     return flat.drop("epoch")
 
 
-#: hybrid payload feed: tombstones ship to the blockify kernel as a
-#: driver-collected sorted array; past this many rows fall back to the
-#: flat-decode path (whose anti-join handles tombstone sets of any
-#: size). Mirrors the Searcher's _TOMBSTONE_GATHER_MAX discipline.
-_HYBRID_TOMB_MAX = 100_000
+#: most tombstones that ride a task closure as a driver-collected sorted
+#: array — the hybrid payload feed here and the Searcher's gather kernel.
+#: Past it the set stays a DataFrame and exclusion is a distributed
+#: anti-join (flat-decode compaction/merge, scatter search), which
+#: handles tombstone sets of any size.
+TOMBSTONE_CLOSURE_MAX = 100_000
 
 
 def _collect_tombstones(catalogs, spark):
@@ -475,9 +463,9 @@ def _collect_tombstones(catalogs, spark):
             t = t.withColumn("before_epoch", F.lit(1 << 62))
         rows = (t.groupBy("pid")
                 .agg(F.max("before_epoch").alias("before_epoch"))
-                .limit(_HYBRID_TOMB_MAX + 1).collect())
+                .limit(TOMBSTONE_CLOSURE_MAX + 1).collect())
         total += len(rows)
-        if total > _HYBRID_TOMB_MAX:
+        if total > TOMBSTONE_CLOSURE_MAX:
             return None
         parts.append(rows)
     pids = np.fromiter((r["pid"] for part in parts for r in part),
@@ -488,8 +476,7 @@ def _collect_tombstones(catalogs, spark):
     return pids[order], eps[order]
 
 
-def _make_hybrid_block_kernel(block_size: int, avgdl: float, k1: float,
-                              b: float, tomb):
+def _make_hybrid_block_kernel(block_size: int, avgdl: float, tomb):
     """mapInPandas kernel of the hybrid payload feed (see
     _payload_blockify): partitions are pre-shuffled on (term_id, salt)
     and sorted within each partition by (term_id, salt) only — rows of a
@@ -506,7 +493,7 @@ def _make_hybrid_block_kernel(block_size: int, avgdl: float, k1: float,
         decode_tfs_auto,
     )
 
-    build_region = _make_region_builder(block_size, avgdl, k1, b)
+    build_region = _make_region_builder(block_size, avgdl)
     t_pids, t_eps = (tomb if tomb is not None
                      else (np.empty(0, np.int64), np.empty(0, np.int64)))
 
@@ -685,7 +672,7 @@ def _payload_blockify(blocks: DataFrame, dict_slice: DataFrame,
     (~1-2 bytes/posting) and decode inside the kernel. Only multi-salt
     terms' postings (placement = pmod(xxhash64(pid), n_salts)) take the
     flat path. Tombstones fold inside the kernel from a driver-collected
-    sorted array (caller guarantees |tombstones| ≤ _HYBRID_TOMB_MAX).
+    sorted array (caller guarantees |tombstones| ≤ TOMBSTONE_CLOSURE_MAX).
     Output is byte-identical to _salted_blockify over the flat decode
     (pytest-pinned)."""
     src = blocks.join(F.broadcast(dict_slice), "term_id")
@@ -715,8 +702,7 @@ def _payload_blockify(blocks: DataFrame, dict_slice: DataFrame,
     rep = single.unionByName(multi_flat).repartition(
         config.shuffle_partitions, "term_id", "salt"
     ).join(F.broadcast(idf_table), "term_id")
-    kernel = _make_hybrid_block_kernel(config.block_size, avgdl,
-                                       config.k1, config.b, tomb)
+    kernel = _make_hybrid_block_kernel(config.block_size, avgdl, tomb)
     out = (
         rep.select("term_id", "salt", "pid", "tf", "doclen", "epoch",
                    "block_id", "pids", "tfs", "dls", "idf")
@@ -820,7 +806,7 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     catalog.refresh(ss)
 
 
-def _make_pid_purge_kernel(bc_pids, k1: float, b: float, avgdl: float):
+def _make_pid_purge_kernel(bc_pids, avgdl: float):
     """mapInPandas kernel: drop the broadcast pid set from each posting
     block IN PLACE (same term_id/block_id/bucket), recomputing
     first/last/num/max_block_score/enc_bytes; blocks with no survivors
@@ -881,13 +867,9 @@ def _make_pid_purge_kernel(bc_pids, k1: float, b: float, avgdl: float):
                         f"term {int(r['term_id'])} missing from "
                         "term_dict during purge"
                     )
-                # identical float64 op order to _make_block_builder, so the
-                # surviving postings' block max is bit-identical to a rebuild
-                tff = tf.astype(np.float64)
-                dlf = dl.astype(np.float64)
-                scores = idf * tff * (k1 + 1.0) / (
-                    tff + k1 * (1.0 - b + b * dlf / avgdl)
-                )
+                # the shared score kernel keeps the surviving postings'
+                # block max bit-identical to a rebuild
+                scores = bm25.np_term_score(tf, dl, idf, avgdl)
                 ep, et, ed = encode_pids(p2), encode_tfs(tf), encode_tfs(dl)
                 rows.append((
                     int(r["term_id"]), int(r["block_id"]),
@@ -988,7 +970,7 @@ def purge_pids(catalog, config: ColBERTConfig, avgdl: float,
     idf_table = catalog.read(ss, "term_dict").select("term_id", "idf")
     bc = ss.sparkContext.broadcast(np.array(pid_list, dtype=np.int64))
     purged = blocks.join(F.broadcast(idf_table), "term_id", "left").mapInPandas(
-        _make_pid_purge_kernel(bc, config.k1, config.b, avgdl),
+        _make_pid_purge_kernel(bc, avgdl),
         schema=POSTINGS_SCHEMA + ", bucket int",
     )
     catalog.rewrite_files(ss, "postings", hit_files, purged,

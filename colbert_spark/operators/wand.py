@@ -37,18 +37,11 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from colbert_spark.functions.bm25 import B, K1, SCORE_DECIMALS
+from colbert_spark.functions.bm25 import SCORE_DECIMALS, np_term_score
 from colbert_spark.functions.codec import decode_pids_auto as decode_pids, \
     decode_tfs_auto as decode_tfs
 
 RANKING_SCHEMA = "qid long, pid long, rank int, score double"
-
-
-def _term_scores(tfs: np.ndarray, dls: np.ndarray, idf: float,
-                 avgdl: float) -> np.ndarray:
-    tf = tfs.astype(np.float64)
-    dl = dls.astype(np.float64)
-    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
 def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
@@ -107,8 +100,8 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
                 if hi == lo:
                     continue
             pids = decode_pids(bytes(pb))
-            scores = _term_scores(decode_tfs(bytes(tb)), decode_tfs(bytes(db)),
-                                  idf, avgdl)
+            scores = np_term_score(decode_tfs(bytes(tb)),
+                                   decode_tfs(bytes(db)), idf, avgdl)
             if excluded is not None:
                 ex_pids, ex_before = excluded
                 # only tombstones whose bound covers THIS block's epoch
@@ -218,8 +211,8 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
                 pdf["dls"]
             ):
                 p = decode_pids(bytes(pb))
-                c = _term_scores(decode_tfs(bytes(tb)), decode_tfs(bytes(db)),
-                                 1.0, avgdl)
+                c = np_term_score(decode_tfs(bytes(tb)),
+                                  decode_tfs(bytes(db)), 1.0, avgdl)
                 tids.append(np.full(p.size, tid, dtype=np.int64))
                 pids.append(p)
                 cores.append(c)

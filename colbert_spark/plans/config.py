@@ -17,12 +17,15 @@ from pathlib import Path
 
 @dataclass
 class ColBERTConfig:
+    """Build and search settings. BM25 has no knobs here: k1=1.2 and
+    b=0.75 are fixed in functions/bm25.py (SURVEY.md §7.3), and the build
+    always persists its token table between phases. load() ignores keys
+    this class no longer has, so config JSON written by older versions
+    (with k1, b, cache_tokens) still loads."""
+
     # analysis
     doc_maxlen: int = 220
     query_maxlen: int = 32
-    # BM25
-    k1: float = 1.2
-    b: float = 0.75
     # index layout
     block_size: int = 128          # postings per block (bounds UDF memory)
     index_partitions: int = 32     # hash(term_id) partitions for segments
@@ -47,11 +50,6 @@ class ColBERTConfig:
     # merge) for the same write volume. Surgery wins when pid locality
     # keeps the flagged set small (appended segments, time-ordered pids).
     purge_fallback_file_fraction: float = 0.8
-    # cache the tokenized corpus between build phases. True trades memory/
-    # local-disk bandwidth for 2 avoided recomputes — right for mid-size
-    # corpora; False recomputes the (fully parallel) tokenize per phase —
-    # right when the token table dwarfs executor storage (web scale).
-    cache_tokens: bool = True
     # paths
     index_root: str = "/tmp/colbert_spark_indexes"
     index_name: str = "default"

@@ -37,18 +37,6 @@ MANIFEST_SCHEMA = (
 
 
 class Indexer:
-    #: per-bucket observe() pivots 4 aggregates per bucket into the write
-    #: job; past this many buckets the expression blow-up costs more than
-    #: the column-pruned read-back pass it replaces. r6: measured on the
-    #: 100k/32-bucket build — the 128-expression CollectMetrics is
-    #: evaluated interpreted per block row and cost ~0.6 s vs the
-    #: read-back job's ~0.1 s (its scan touches only 4 footer-backed int
-    #: columns), and the gap widens with both blocks and buckets, so
-    #: observe stays only where it is genuinely cheaper: single-digit
-    #: bucket counts (small/test indexes, where one more Spark job is
-    #: relatively expensive).
-    _OBSERVE_MAX_BUCKETS = 8
-
     def __init__(self, config: ColBERTConfig | None = None):
         self.config = ColBERTConfig.from_existing(config)
 
@@ -92,9 +80,8 @@ class Indexer:
         # scheduling latency regardless of cluster size, which is exactly
         # what erodes N→4N scaling efficiency. Stats are folded into as few
         # actions as possible.
-        token_df = builder.tokenize(collection, cfg)
-        if cfg.cache_tokens:
-            token_df = token_df.persist()
+        # persisted: the stats action and the postings build both read it
+        token_df = builder.tokenize(collection, cfg).persist()
         # doc stats straight from the source (map-only), not via token_df —
         # no shuffle, and it doesn't force an early token materialization
         from colbert_spark.functions.analysis import doclen as _doclen
@@ -176,37 +163,6 @@ class Indexer:
         if done:
             blocks = blocks.filter(F.col("bucket").isin(todo))
 
-        # per-bucket lineage metrics ride the write itself (observe() →
-        # CollectMetrics inside the write job): no second pass over the
-        # written index. bit_xor of xxhash64 is order-independent and
-        # overflow-free; the build is deterministic, so the content
-        # fingerprint doubles as an input-drift detector for resume.
-        # Pivoted per-bucket aggregates scale with index_partitions, so
-        # beyond _OBSERVE_MAX_BUCKETS fall back to one column-pruned
-        # read-back pass (never touches the binary posting columns).
-        obs = None
-        # Observation.get asserts if the write executed zero tasks (a
-        # corpus that tokenizes to nothing) — skip observe and emit
-        # all-empty manifest rows instead. A resume against a COMPLETE
-        # manifest (todo == []) must also skip: observe() rejects an empty
-        # aggregate list, and there is nothing to write anyway — the re-run
-        # is a no-op that just refreshes metadata.json.
-        if num_postings > 0 and todo and len(todo) <= self._OBSERVE_MAX_BUCKETS:
-            from pyspark.sql import Observation
-
-            obs = Observation("bucket_metrics")
-            h = F.xxhash64("term_id", "block_id", "first_pid", "num_postings")
-            aggs = []
-            for bkt in todo:
-                cond = F.col("bucket") == bkt
-                aggs += [
-                    F.count(F.when(cond, 1)).alias(f"nb_{bkt}"),
-                    F.sum(F.when(cond, F.col("num_postings"))).alias(f"np_{bkt}"),
-                    F.sum(F.when(cond, F.col("enc_bytes"))).alias(f"bw_{bkt}"),
-                    F.bit_xor(F.when(cond, h)).alias(f"fp_{bkt}"),
-                ]
-            blocks = blocks.observe(obs, *aggs)
-
         # ---- postings write, with the three stats-table writes overlapped
         # (term_dict / doc_stats / corpus_stats depend only on the cached
         # stats inputs, not on the postings — submitting them from driver
@@ -239,8 +195,12 @@ class Indexer:
                 fut.result()
         wall_ms = int((time.monotonic() - t0) * 1000)
         # manifest: every bucket gets a row (resume contract). Rows for
-        # buckets built THIS run come from the write's observed metrics;
-        # previously-built buckets keep their original manifest rows
+        # buckets built THIS run come from one column-pruned read-back of
+        # their postings (4 footer-backed int columns, never the binary
+        # payloads); bit_xor of xxhash64 is order-independent and
+        # overflow-free, and the build is deterministic, so the content
+        # fingerprint doubles as an input-drift detector for resume.
+        # Previously-built buckets keep their original manifest rows
         # (collected BEFORE the manifest dir is overwritten — tiny table).
         old_rows: list[tuple] = []
         if done:
@@ -253,31 +213,9 @@ class Indexer:
                         "num_postings", "bytes_written", "wall_ms", "status")
                 .collect()
             ]
-        if not todo:
-            new_rows = []
-        elif num_postings == 0:
-            # nothing was written; the postings dir has no parquet footers
-            # to read back either
-            new_rows = [
-                (int(bkt), "empty", 0, 0, 0, wall_ms, "ok") for bkt in todo
-            ]
-        elif obs is not None:
-            vals = obs.get
-            new_rows = [
-                (
-                    int(bkt),
-                    ("empty" if vals[f"fp_{bkt}"] is None
-                     else str(vals[f"fp_{bkt}"])),
-                    int(vals[f"nb_{bkt}"] or 0),
-                    int(vals[f"np_{bkt}"] or 0),
-                    int(vals[f"bw_{bkt}"] or 0),
-                    wall_ms,
-                    "ok",
-                )
-                for bkt in todo
-            ]
-        else:
-            # fallback: one column-pruned read-back over this run's buckets
+        per_bucket = {}
+        # an index with no postings wrote no parquet footers to read back
+        if todo and num_postings > 0:
             per_bucket = {
                 r["bucket"]: r
                 for r in cat.read(spark, "postings")
@@ -294,19 +232,13 @@ class Indexer:
                 )
                 .collect()
             }
-            new_rows = [
-                (
-                    int(bkt),
-                    (str(per_bucket[bkt]["fp"]) if bkt in per_bucket
-                     else "empty"),
-                    int(per_bucket[bkt]["num_blocks"]) if bkt in per_bucket else 0,
-                    int(per_bucket[bkt]["num_postings"]) if bkt in per_bucket else 0,
-                    int(per_bucket[bkt]["bytes_written"]) if bkt in per_bucket else 0,
-                    wall_ms,
-                    "ok",
-                )
-                for bkt in todo
-            ]
+        new_rows = [
+            (int(bkt), str(r["fp"]), int(r["num_blocks"]),
+             int(r["num_postings"]), int(r["bytes_written"]), wall_ms, "ok")
+            if (r := per_bucket.get(bkt)) is not None
+            else (int(bkt), "empty", 0, 0, 0, wall_ms, "ok")
+            for bkt in todo
+        ]
         manifest = spark.createDataFrame(old_rows + new_rows, MANIFEST_SCHEMA)
         cat.write(manifest, "manifest")
         cat.write_json(
@@ -321,8 +253,7 @@ class Indexer:
                 "wall_ms": wall_ms,
             },
         )
-        if cfg.cache_tokens:
-            token_df.unpersist()
+        token_df.unpersist()
         doc_stats_df.unpersist()
         term_agg_df.unpersist()
         # drop listings captured mid-build so post-build readers see the

@@ -133,14 +133,11 @@ def merge_indexes(
         )
         tagg = builder.block_term_stats(blocks_all, tomb).persist()
     else:
+        # the flat decode feeds BOTH the stats pass and the re-blockify
         flat = reduce(
             DataFrame.unionByName,
             [builder.live_flat_postings(cat, spark) for cat in srcs],
-        )
-        if cfg.cache_tokens:
-            # the flat decode feeds BOTH the stats pass and the
-            # re-blockify — same persist knob as the Indexer's token cache
-            flat = flat.persist()
+        ).persist()
         tagg = flat.groupBy("term_id").agg(
             F.count(F.lit(1)).alias("df"),
             F.sum("tf").alias("cf"),
@@ -278,7 +275,7 @@ def merge_indexes(
     }
     dest.write_json("plan.json", meta)
     dest.write_json("metadata.json", meta)
-    if flat is not None and cfg.cache_tokens:
+    if flat is not None:
         flat.unpersist()
     doc_stats_df.unpersist()
     tagg.unpersist()

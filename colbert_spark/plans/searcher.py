@@ -12,9 +12,11 @@ Where the reference loops queries serially through dense_search
     postings scan: bucket ∈ query buckets AND term_id ∈ query terms
       → partition pruning (bucket=) + row-group min/max pruning (term_id);
       only the query's posting blocks are ever read.
-    gather mode:  blocks ⋈ broadcast(qterms) → groupBy(qid) applyInPandas
-                  MaxScore kernel (block-max skipping) → exact top-k.
-    scatter mode: decode once per block, broadcast-join idf, relational agg.
+    gather:  blocks ⋈ broadcast(qterms) → groupBy(qid) applyInPandas
+             MaxScore kernel (block-max skipping) → exact top-k.
+    scatter: decode once per block, broadcast-join idf, relational agg.
+    One rule picks the path per call (search_all); both return identical
+    rankings.
 
 The reference's k-dependent funnel knobs (ncells/threshold/ndocs,
 searcher.py:106-127) have no free parameters here: block-max pruning is
@@ -23,13 +25,14 @@ exact, so there is nothing to tune for quality.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import asdict
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from colbert_spark.functions import analysis
-from colbert_spark.operators import wand
+from colbert_spark.operators import builder, wand
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.sources.catalog import make_catalog
 from colbert_spark.sources.ranking import Ranking
@@ -56,13 +59,9 @@ class Searcher:
         self.avgdl: float = meta["avg_doclen"]
         self.term_dict = self.catalog.read(spark, "term_dict").persist()
         self.term_dict.count()  # materialize once
+        self._qterms: DataFrame | None = None  # last call's cached frame
+        self._qterms_lock = threading.Lock()
         self._load_tombstones()
-
-    #: past this many tombstones, the exclusion set no longer rides the
-    #: gather kernel's closure as a driver numpy array (per-task ship of a
-    #: multi-MB array + driver memory) — it stays a DataFrame and search
-    #: runs in scatter mode with a distributed anti-join instead
-    _TOMBSTONE_GATHER_MAX = 100_000
 
     def _load_tombstones(self) -> None:
         """Removed pids (IndexUpdater.remove analog) — excluded at decode,
@@ -70,8 +69,11 @@ class Searcher:
         dropped only from blocks whose epoch < before_epoch (a re-added
         pid's newer postings score normally).
 
-        Small sets → driver numpy pair (gather kernel filters after
-        decode). Large sets → DataFrame only (forces scatter)."""
+        tombstones_df is the catalog-backed frame (scatter's anti-join).
+        Sets of at most builder.TOMBSTONE_CLOSURE_MAX rows also load as a
+        driver numpy pair for the gather kernel's closure; past that the
+        per-task ship of a multi-MB array costs too much, so tombstones
+        stays None and every search runs scatter."""
         import numpy as np
 
         from colbert_spark.plans.index_updater import load_tombstones
@@ -82,11 +84,12 @@ class Searcher:
         if tomb is None:
             return
         tomb = tomb.select("pid", "before_epoch")
-        if tomb.limit(self._TOMBSTONE_GATHER_MAX + 1).count() \
-                > self._TOMBSTONE_GATHER_MAX:
-            self.tombstones_df = tomb
+        rows = tomb.limit(builder.TOMBSTONE_CLOSURE_MAX + 1).collect()
+        if not rows:
             return
-        rows = tomb.collect()
+        self.tombstones_df = tomb
+        if len(rows) > builder.TOMBSTONE_CLOSURE_MAX:
+            return
         pids = np.array([r["pid"] for r in rows], dtype=np.int64)
         befores = np.array([r["before_epoch"] for r in rows], dtype=np.int64)
         order = np.argsort(pids)
@@ -96,7 +99,7 @@ class Searcher:
     def _query_terms(self, queries: DataFrame) -> DataFrame:
         """(qid, term_id, idf, df) for in-dictionary distinct query terms.
         df rides along so ONE collect of this (tiny) frame answers both
-        the auto-mode decision and the scan-pruning term list."""
+        the path choice and the scan-pruning term list."""
         qt = queries.select(
             "qid",
             F.explode(
@@ -128,7 +131,7 @@ class Searcher:
         return scan.join(F.broadcast(wanted), "term_id", "left_semi")
 
     # -- public API ---------------------------------------------------------
-    #: auto mode switches to scatter beyond these (query count, head-term df)
+    #: search_all switches to scatter beyond these (query count, head-term df)
     _AUTO_SCATTER_QUERIES = 64
     _AUTO_SCATTER_DF = 1_000_000
 
@@ -136,19 +139,21 @@ class Searcher:
         self,
         queries: DataFrame | dict[int, str],
         k: int = 10,
-        mode: str = "auto",
         qid_to_pids: DataFrame | None = None,
         allow_small: bool = False,
         after: DataFrame | None = None,
     ) -> Ranking:
-        """Batch retrieval → Ranking. mode ∈ {auto, gather, scatter}.
+        """Batch retrieval → Ranking, via gather or scatter.
 
         gather ships each query's candidate blocks to one group (block-max
         skipping, lowest latency) — but a head term's ENTIRE posting list
         lands in every matching query's group, so at scale a hot term ×
-        many queries is a shuffle amplifier. auto therefore picks scatter
-        (decode-once, no per-query block duplication) for large batches or
-        when any query term's df is huge; gather otherwise.
+        many queries is a shuffle amplifier. The call therefore takes
+        scatter (decode-once, no per-query block duplication) for more
+        than _AUTO_SCATTER_QUERIES queries, a query term with df above
+        _AUTO_SCATTER_DF, an allow-list, or a tombstone set too large for
+        the gather closure; gather otherwise. provenance["mode"] names the
+        path taken.
 
         qid_to_pids: optional (qid, pid) allow-list DataFrame (F3 semantics:
         restrict each query's search space before ranking). allow_small=True
@@ -184,44 +189,42 @@ class Searcher:
         qterms = self._query_terms(queries).persist()
         # ONE driver action answers everything the planner needs: cube
         # gives the vocab-bounded per-term rows (→ scan-pruning tid list)
-        # plus the grand-total row (→ auto-mode nq/maxdf) in a single job.
+        # plus the grand-total row (→ path choice nq/maxdf) in a single job.
         stats_rows = (
             qterms.cube("term_id")
             .agg(F.countDistinct("qid").alias("nq"), F.max("df").alias("maxdf"))
             .collect()
         )
+        # one cached query-term frame per Searcher: the previous call's
+        # goes once this one is materialized (a Ranking planned on it stays
+        # valid — it recomputes instead of reading the cache)
+        with self._qterms_lock:
+            prev, self._qterms = self._qterms, qterms
+        if prev is not None:
+            prev.unpersist()
         tids = [int(r["term_id"]) for r in stats_rows
                 if r["term_id"] is not None]
-        if mode == "auto":
-            total = next((r for r in stats_rows if r["term_id"] is None), None)
-            big = total is not None and (
+        total = next((r for r in stats_rows if r["term_id"] is None), None)
+        scatter = (
+            qid_to_pids is not None
+            # tombstone set too large for the gather closure — scatter's
+            # distributed anti-join is the only scale-safe exclusion
+            or (self.tombstones_df is not None and self.tombstones is None)
+            or (total is not None and (
                 (total["nq"] or 0) > self._AUTO_SCATTER_QUERIES
-                or (total["maxdf"] or 0) > self._AUTO_SCATTER_DF
-            )
-            mode = "scatter" if big else "gather"
+                or (total["maxdf"] or 0) > self._AUTO_SCATTER_DF))
+        )
+        mode = "scatter" if scatter else "gather"
         blocks = self._candidate_blocks(tids)
         if blocks is None:
             empty = self.spark.createDataFrame([], wand.RANKING_SCHEMA)
             return Ranking(empty, self._provenance(k, mode))
 
-        tomb_df, tomb_small = None, True
-        if self.tombstones_df is not None:
-            # tombstone set too large for the gather closure — scatter's
-            # distributed anti-join is the only scale-safe exclusion
-            tomb_df, tomb_small, mode = self.tombstones_df, False, "scatter"
-        elif self.tombstones is not None and self.tombstones[0].size:
-            tomb_df = self.spark.createDataFrame(
-                [(int(p), int(b))
-                 for p, b in zip(self.tombstones[0], self.tombstones[1])],
-                "pid long, before_epoch long",
-            )
-        if qid_to_pids is not None or mode == "scatter":
-            ranking = wand.topk_scatter(blocks, qterms, k, self.avgdl,
-                                        qid_to_pids=qid_to_pids,
-                                        tombstones=tomb_df,
-                                        allow_small=allow_small,
-                                        tombstones_small=tomb_small,
-                                        after=after)
+        if scatter:
+            ranking = wand.topk_scatter(
+                blocks, qterms, k, self.avgdl, qid_to_pids=qid_to_pids,
+                tombstones=self.tombstones_df, allow_small=allow_small,
+                tombstones_small=self.tombstones is not None, after=after)
         else:
             qblocks = blocks.join(F.broadcast(qterms), "term_id").select(
                 "qid", "term_id", "block_id", "idf", "first_pid", "last_pid",

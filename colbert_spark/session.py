@@ -23,7 +23,7 @@ def get_spark(
     """Build (or fetch) the engine SparkSession.
 
     cpus: thread count for local mode ("*" for all). Honors
-    $SPARK_GRAFT_CPUS when unset, so bench.py can sweep parallelism
+    $SPARK_GRAFT_CPUS when unset, so benchmarks can sweep parallelism
     (the in-sandbox stand-in for N vs 4N executors).
     """
     if cpus is None:

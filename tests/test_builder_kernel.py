@@ -31,8 +31,8 @@ def _random_region(rng, n_groups, max_group=300):
     return df.sort_values(["term_id", "salt", "pid"]).reset_index(drop=True)
 
 
-def _run_old_kernel(pdf, block_size, avgdl, k1, b):
-    old = builder._make_block_builder(block_size, avgdl, k1, b)
+def _run_old_kernel(pdf, block_size, avgdl):
+    old = builder._make_block_builder(block_size, avgdl)
     outs = []
     for (_, _), grp in pdf.groupby(["term_id", "salt"], sort=True):
         outs.append(old(grp.reset_index(drop=True)))
@@ -44,15 +44,15 @@ def _run_old_kernel(pdf, block_size, avgdl, k1, b):
 def test_partition_kernel_matches_per_group_kernel(seed, batch_split):
     rng = np.random.default_rng(seed)
     pdf = _random_region(rng, n_groups=12)
-    avgdl, k1, b, bs = 45.7, 1.2, 0.75, 128
-    kern = builder._make_partition_block_kernel(bs, avgdl, k1, b)
+    avgdl, bs = 45.7, 128
+    kern = builder._make_partition_block_kernel(bs, avgdl)
     if batch_split is None:
         batches = [pdf]
     else:
         batches = [pdf.iloc[i:i + batch_split].reset_index(drop=True)
                    for i in range(0, len(pdf), batch_split)]
     got = pd.concat(list(kern(iter(batches))), ignore_index=True)
-    want = _run_old_kernel(pdf, bs, avgdl, k1, b)
+    want = _run_old_kernel(pdf, bs, avgdl)
     key = ["term_id", "block_id"]
     got = got.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)

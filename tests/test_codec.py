@@ -4,10 +4,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from colbert_spark.functions.codec import (
-    decode_pids,
-    decode_tfs,
-    encode_pids,
-    encode_tfs,
+    encode_pids_auto,
     varint_decode,
     varint_encode,
 )
@@ -38,27 +35,10 @@ def test_varint_roundtrip_property(xs):
     assert np.array_equal(varint_decode(varint_encode(vals)), vals)
 
 
-@settings(max_examples=100, deadline=None)
-@given(st.sets(st.integers(min_value=0, max_value=10**12), max_size=300))
-def test_pid_delta_roundtrip(pids):
-    arr = np.sort(np.array(sorted(pids), dtype=np.int64))
-    assert np.array_equal(decode_pids(encode_pids(arr)), arr)
-
-
-def test_pid_rejects_unsorted():
-    with pytest.raises(ValueError):
-        encode_pids(np.array([5, 3, 9], dtype=np.int64))
-
-
-def test_tf_roundtrip():
-    tfs = np.array([1, 1, 2, 7, 1000, 1], dtype=np.int64)
-    assert np.array_equal(decode_tfs(encode_tfs(tfs)), tfs)
-
-
 def test_compression_wins_on_dense_lists():
     # dense pid runs → 1-byte gaps; 8-byte int64 → ≥8x smaller
     pids = np.arange(0, 100_000, 3, dtype=np.int64)
-    enc = encode_pids(pids)
+    enc = encode_pids_auto(pids)
     assert len(enc) < pids.nbytes / 7
 
 
@@ -67,8 +47,6 @@ def test_compression_wins_on_dense_lists():
 from colbert_spark.functions.codec import (  # noqa: E402
     bitpack_decode,
     bitpack_encode,
-    decode_pids_packed,
-    encode_pids_packed,
 )
 
 
@@ -93,14 +71,6 @@ def test_bitpack_roundtrip_property(xs):
     assert np.array_equal(bitpack_decode(bitpack_encode(arr)), arr)
 
 
-@given(st.sets(st.integers(min_value=0, max_value=2**40), min_size=1,
-               max_size=300))
-@settings(max_examples=60, deadline=None)
-def test_pid_packed_roundtrip(pids):
-    arr = np.array(sorted(pids), dtype=np.uint64)
-    assert np.array_equal(decode_pids_packed(encode_pids_packed(arr)), arr)
-
-
 def test_bitpack_beats_varint_on_dense_lists():
     """FOR's win case — dense head-term lists (gaps 1-4, exactly the
     lists that dominate decode time): ~2-3 bits/value vs varint's fixed
@@ -109,8 +79,7 @@ def test_bitpack_beats_varint_on_dense_lists():
     records the trade-off."""
     rng = np.random.default_rng(3)
     gaps = rng.integers(1, 5, 20_000).astype(np.uint64)
-    pids = np.cumsum(gaps, dtype=np.uint64)
-    packed, vb = len(encode_pids_packed(pids)), len(encode_pids(pids))
+    packed, vb = len(bitpack_encode(gaps)), len(varint_encode(gaps))
     assert packed < vb / 2
 
 

@@ -1,6 +1,6 @@
 """Indexer + Searcher end-to-end: the real (varint/block-max) engine must be
-rank-identical to the brute-force scorer AND the Python oracle; gather and
-scatter modes must agree; overwrite modes must follow indexer.py:60-82."""
+rank-identical to the brute-force scorer AND the Python oracle; the gather
+and scatter paths must agree; overwrite modes must follow indexer.py:60-82."""
 
 from __future__ import annotations
 
@@ -63,10 +63,12 @@ def test_gather_matches_oracle(spark, built):
             assert gs == pytest.approx(es, abs=1e-6)
 
 
-def test_scatter_equals_gather(spark, built):
+def test_scatter_equals_gather(spark, built, force_path):
     _, queries, _, _, searcher = built
-    a = _todict(searcher.search_all(queries, k=10, mode="gather").df.collect())
-    b = _todict(searcher.search_all(queries, k=10, mode="scatter").df.collect())
+    force_path("gather")
+    a = _todict(searcher.search_all(queries, k=10).df.collect())
+    force_path("scatter")
+    b = _todict(searcher.search_all(queries, k=10).df.collect())
     assert a == b
 
 
@@ -97,7 +99,7 @@ def test_pid_allowlist_filter(spark, built):
     assert pids[0] == full_pids[2]
 
 
-def test_search_after_indexed_both_modes(spark, built):
+def test_search_after_indexed_both_modes(spark, built, force_path):
     """Indexed keyset pagination: page 2 via a rank-5 cursor must equal
     ranks 6-10 of the deep ranking rebased, in BOTH gather and scatter
     modes, and match brute.bm25_search_after row-for-row. Queries
@@ -126,10 +128,11 @@ def test_search_after_indexed_both_modes(spark, built):
         for i in range(min(5, len(rows) - 5)))
 
     for mode in ("gather", "scatter"):
-        got = sorted(
-            (r.qid, r.rank, r.pid, r.score)
-            for r in searcher.search_all(queries, k=5, mode=mode,
-                                         after=cursors).df.collect())
+        force_path(mode)
+        page2 = searcher.search_all(queries, k=5, after=cursors)
+        assert page2.provenance["mode"] == mode
+        got = sorted((r.qid, r.rank, r.pid, r.score)
+                     for r in page2.df.collect())
         assert got == want, mode
         assert all(q != dropped for q, *_ in got)
 
@@ -153,20 +156,31 @@ def test_empty_query_and_oov(spark, built):
     assert pids == [] and ranks == [] and scores == []
 
 
-def test_auto_mode_selects_and_matches(spark, built):
+def test_auto_mode_selects_and_matches(spark, built, monkeypatch):
     _, queries, _, _, searcher = built
-    auto = _todict(searcher.search_all(queries, k=10, mode="auto").df.collect())
-    gather = _todict(searcher.search_all(queries, k=10, mode="gather").df.collect())
-    assert auto == gather
+    gather = searcher.search_all(queries, k=10)
+    assert gather.provenance["mode"] == "gather"  # 30 queries ≤ threshold
     # huge batch heuristic: many queries → scatter (results identical anyway)
-    searcher2 = searcher
-    old = searcher2._AUTO_SCATTER_QUERIES
-    try:
-        searcher2._AUTO_SCATTER_QUERIES = 1
-        forced = _todict(searcher2.search_all(queries, k=10, mode="auto").df.collect())
-        assert forced == gather
-    finally:
-        searcher2._AUTO_SCATTER_QUERIES = old
+    monkeypatch.setattr(Searcher, "_AUTO_SCATTER_QUERIES", 1)
+    forced = searcher.search_all(queries, k=10)
+    assert forced.provenance["mode"] == "scatter"
+    # the earlier Ranking stays valid after the next call drops its cache
+    assert _todict(forced.df.collect()) == _todict(gather.df.collect())
+
+
+def test_search_calls_keep_one_cached_query_frame(spark, built):
+    """Each search_all persists its query-term frame; the next call must
+    release it, so repeated calls do not grow the session's cache."""
+    _, _, _, queries_pdf, searcher = built
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    searcher.search(queries_pdf["text"].iloc[0], k=5)
+    after_first = persisted()
+    for text in queries_pdf["text"].iloc[1:5]:
+        searcher.search(text, k=5)
+    assert persisted() <= after_first
 
 
 def test_degenerate_corpora(spark, tmp_path):

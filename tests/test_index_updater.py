@@ -141,25 +141,26 @@ def test_readd_path_avoids_driver_collect(spark, env, monkeypatch):
     assert _rank(spark, cfg, queries) == before
 
 
-def test_large_tombstone_set_forces_scatter(spark, env, monkeypatch):
-    """Past _TOMBSTONE_GATHER_MAX the exclusion set must stay a DataFrame
+def test_large_tombstone_set_forces_scatter(spark, env, monkeypatch,
+                                           force_path):
+    """Past TOMBSTONE_CLOSURE_MAX the exclusion set must stay a DataFrame
     (distributed anti-join) instead of riding the gather kernel's closure
     as a driver numpy array — and rankings must be identical."""
     cfg, docs, queries = env
     removed = list(range(100, 120))
     IndexUpdater("u1", spark, cfg).remove(removed)
 
+    force_path("gather")
     base = Searcher("u1", spark, cfg)
     assert base.tombstones is not None  # 20 < default threshold → numpy path
     expect = sorted(map(tuple,
-                        base.search_all(queries, k=10, mode="gather")
-                        .df.collect()))
+                        base.search_all(queries, k=10).df.collect()))
     assert all(pid not in set(removed) for (_, pid, _, _) in expect)
 
-    monkeypatch.setattr(Searcher, "_TOMBSTONE_GATHER_MAX", 5)
+    monkeypatch.setattr(builder, "TOMBSTONE_CLOSURE_MAX", 5)
     s = Searcher("u1", spark, cfg)
     assert s.tombstones is None and s.tombstones_df is not None
-    r = s.search_all(queries, k=10, mode="gather")
+    r = s.search_all(queries, k=10)
     assert r.provenance["mode"] == "scatter"  # guard overrode gather
     assert sorted(map(tuple, r.df.collect())) == expect
 

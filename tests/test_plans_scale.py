@@ -67,14 +67,15 @@ def test_column_pruning_on_documents_scan(spark):
     assert "doc_id" in read_schema and "lang" in read_schema
 
 
-def test_scatter_partials_combine_before_shuffle(spark, built):
+def test_scatter_partials_combine_before_shuffle(spark, built, force_path):
     """The scatter layout's one corpus-sized shuffle must be the combined
     (qid,pid) partial sums — i.e. a partial_sum HashAggregate below the
     exchange."""
     cfg, _ = built
     searcher = Searcher("p1", spark, cfg)
     queries = spark.createDataFrame([(0, "t00000 t00042")], "qid long, text string")
-    ranking = searcher.search_all(queries, k=10, mode="scatter").df
+    force_path("scatter")
+    ranking = searcher.search_all(queries, k=10).df
     plan = ranking._jdf.queryExecution().executedPlan().toString()
     before_exchange = plan.split("Exchange hashpartitioning(qid")[1:]
     assert before_exchange, "expected a (qid, pid) aggregation exchange"

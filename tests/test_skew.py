@@ -84,10 +84,11 @@ def test_skewed_query_is_exact(spark, built):
                [(p, r) for p, r, _ in e], f"qid={qid}"
 
 
-def test_many_queries_sharing_head_term_scatter_equals_gather(spark, built):
+def test_many_queries_sharing_head_term_scatter_equals_gather(spark, built,
+                                                             force_path):
     """The shuffle-amplification scenario: many queries all containing the
     head term (≥60% df). Scatter (decode-once) and gather (per-query
-    groups) must produce identical rankings — and auto mode must pick
+    groups) must produce identical rankings — and search_all must pick
     scatter for a batch this large."""
     cfg, _, _ = built
     searcher = Searcher("skew", spark, cfg)
@@ -95,14 +96,12 @@ def test_many_queries_sharing_head_term_scatter_equals_gather(spark, built):
         [(q, f"{HEAD_TERM} t{q % 19:05d}") for q in range(100)],
         "qid long, text string",
     )
-    g = sorted(searcher.search_all(queries, k=10, mode="gather")
-               .flat_ranking())
-    s = sorted(searcher.search_all(queries, k=10, mode="scatter")
-               .flat_ranking())
-    assert g == s and len(g) > 0
-    auto = searcher.search_all(queries, k=10, mode="auto")
+    auto = searcher.search_all(queries, k=10)
     assert auto.provenance["mode"] == "scatter"  # 100 queries > threshold
-    assert sorted(auto.flat_ranking()) == g
+    s = sorted(auto.flat_ranking())
+    force_path("gather")
+    g = sorted(searcher.search_all(queries, k=10).flat_ranking())
+    assert g == s and len(g) > 0
 
 
 def test_compaction_of_skewed_index_stays_bounded(spark, tmp_path):
