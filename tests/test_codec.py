@@ -4,7 +4,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from colbert_spark.functions.codec import (
+    TAG_BITPACK,
+    decode_pids_auto,
+    decode_tfs_auto,
+    decode_u64_auto,
     encode_pids_auto,
+    encode_pids_auto_batch,
+    encode_tfs_auto,
     varint_decode,
     varint_encode,
 )
@@ -33,6 +39,36 @@ def test_varint_single_byte_values():
 def test_varint_roundtrip_property(xs):
     vals = np.array(xs, dtype=np.uint64)
     assert np.array_equal(varint_decode(varint_encode(vals)), vals)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.sets(st.integers(min_value=0, max_value=10**12), min_size=1,
+               max_size=300))
+def test_pid_delta_roundtrip(pids):
+    """A pid payload is varint(first pid) followed by the tagged codec
+    over the gaps between consecutive pids."""
+    arr = np.array(sorted(pids), dtype=np.int64)
+    enc = encode_pids_auto(arr)
+    head = varint_encode(np.array([arr[0]], dtype=np.uint64))
+    assert enc.startswith(head)
+    gaps = decode_u64_auto(enc[len(head):]).astype(np.int64)
+    assert np.array_equal(gaps, np.diff(arr))
+    assert np.array_equal(decode_pids_auto(enc), arr)
+
+
+def test_pid_rejects_unsorted():
+    with pytest.raises(ValueError):
+        encode_pids_auto(np.array([3, 3, 9], dtype=np.int64))  # repeat
+    with pytest.raises(ValueError):                            # batched
+        encode_pids_auto_batch(np.array([1, 7, 4, 2, 5], dtype=np.int64),
+                               np.array([0, 3]), np.array([3, 2]))
+
+
+def test_tf_roundtrip():
+    tfs = np.array([1, 1, 2, 7, 1000, 1], dtype=np.int64)
+    dec = decode_tfs_auto(encode_tfs_auto(tfs))
+    assert dec.dtype == np.int64
+    assert np.array_equal(dec, tfs)
 
 
 def test_compression_wins_on_dense_lists():
@@ -69,6 +105,20 @@ def test_bitpack_empty_and_zero_width():
 def test_bitpack_roundtrip_property(xs):
     arr = np.array(xs, dtype=np.uint64)
     assert np.array_equal(bitpack_decode(bitpack_encode(arr)), arr)
+
+
+@given(st.integers(min_value=0, max_value=2**40),
+       st.lists(st.integers(min_value=1, max_value=4), min_size=32,
+                max_size=300))
+@settings(max_examples=60, deadline=None)
+def test_pid_packed_roundtrip(first, gaps):
+    """Dense gaps take the FOR bitpack branch of the pid codec; the
+    absolute first pid stays outside the packed frame."""
+    arr = first + np.concatenate(([0], np.cumsum(gaps))).astype(np.int64)
+    enc = encode_pids_auto(arr)
+    head = varint_encode(np.array([first], dtype=np.uint64))
+    assert enc[len(head)] == TAG_BITPACK
+    assert np.array_equal(decode_pids_auto(enc), arr)
 
 
 def test_bitpack_beats_varint_on_dense_lists():

@@ -133,7 +133,11 @@ def test_ledger_stays_bounded_over_many_batches(spark, tmp_path):
     per-batch driver cost."""
     cfg, docs, queries = _env(spark, tmp_path, "st4")
     cat = IndexCatalog(str(pathlib.Path(cfg.index_root) / "st4"))
-    empty = spark.createDataFrame([], "pid long, text string")
+    # built from emptyRDD: a frame built from [] runs a Python task per
+    # partition on every emptiness probe, which dominated the 1,000
+    # calls without exercising the ledger code under test
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                  "pid long, text string")
     for bid in range(1000):
         assert _apply_batch(cfg, "st4", empty, bid, "pid", "text",
                             stream_key="ck") is True
